@@ -80,16 +80,6 @@ EXTRA = [
     "text_tfidf_topterms",
     "pipeline_chunk_documents",
     "pipeline_pack_sequences",
-    # JVM-fold vs Arrow comparison carrier: dedup_semantic stays benched
-    # next to dedup_semantic_arrow so the fold-vs-matmul signal is
-    # re-measured every round. Its family twins sim_knn_join and
-    # sim_hard_negatives (JVM forms) are dropped from the battery
-    # (VERDICT r6 #5 — ~10 s of redundant wall): their like-for-like
-    # numbers are carried by the SAME comparison pair (identical
-    # cluster-bounded pair-join plan shape, only the scoring fold
-    # differs) plus their benched Arrow twins below. Both stay in the
-    # full-registry oracle sweep and the bit-equality pins.
-    "dedup_semantic",
     "pipeline_shard_layout",
     "w_sessionize",
     "w_scd2_history",
@@ -106,7 +96,6 @@ EXTRA = [
     "tpch_q21_waiting_supplier",
     # r5: first bench rows BEFORE their first driver window round, so
     # their first correctness round has a perf baseline (VERDICT r4 §5).
-    # (sim_hard_negatives JVM form dropped r7 — see dedup_semantic note.)
     "emb_label_centroids",
     "sim_centroid_classify",
     # late-r5 additions (r6 rotation queue) — same pre-baseline rule.
@@ -118,8 +107,6 @@ EXTRA = [
     "asof_tolerance_attribution",
     "sim_quantized_topk",
     "maint_incremental_agg",
-    # Arrow throughput forms of the cluster-bounded cosine family —
-    # benched next to their JVM twins (measured 2.6-3.2x at sf0.1).
     "sim_knn_join_arrow",
     "dedup_semantic_arrow",
     "sim_hard_negatives_arrow",
@@ -277,36 +264,6 @@ EXTRA = [
 ]
 
 
-def _ivf_bare(spark, sf_dir):
-    """The bare IVF top-k operator (build-or-probe + rerank), without
-    the brute-force exact twin + certification the registry's
-    ``sim_ivf_topk`` validation form runs alongside it. Benched under
-    its own id so round-over-round comparisons stay like-for-like:
-    the r4 `sim_ivf_topk` number jumped +77% when the entry's
-    SEMANTICS changed to the validation form (roughly double the work
-    by construction), not because the operator regressed (VERDICT r4
-    "watch item")."""
-    from pyspark.sql import functions as F
-
-    from sql_engine_triangle_spark.catalog import load_table
-    from sql_engine_triangle_spark.operators import similarity
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    qvec = similarity.query_vector(emb, 0)
-    return similarity.ivf_topk(emb, qvec, k=10, exclude_id=0, cache_key=sf_dir)
-
-
-# Benched operator forms that are not registry entries (bare operators
-# whose registry twin is a validation form with extra by-construction
-# work). Keys MUST not collide with registry names — asserted at
-# startup in main() (ADVICE r5: BARE_OPS.get(name) wins silently over
-# a same-named registry entry, so a collision would quietly bench the
-# wrong function).
-BARE_OPS = {
-    "sim_ivf_topk_bare": _ivf_bare,
-}
-
-
 def _cohort_of(name: str) -> str:
     """Assign every benched entry to a fresh-JVM cohort by family.
     Prefix rules (not hand lists) so new entries land in a cohort
@@ -346,8 +303,7 @@ COHORT_ORDER = [
 
 
 def _bench_names() -> list[str]:
-    names = [n for n in HEADLINE + EXTRA if n in registry.names()]
-    return names + list(BARE_OPS)
+    return [n for n in HEADLINE + EXTRA if n in registry.names()]
 
 
 def _release_persisted(spark) -> None:
@@ -402,7 +358,7 @@ def _run_cohort(cohort: str) -> None:
 
     timings: dict[str, float] = {}
     for name in names:
-        fn = BARE_OPS.get(name) or registry.get(name).fn
+        fn = registry.get(name).fn
 
         def run() -> None:
             # noop sink: full evaluation of EVERY output column on the
@@ -449,7 +405,7 @@ def _run_solo(name: str, n_runs: int = 3) -> None:
             load_table(spark, sf_dir, t).count()
         except Exception:  # noqa: BLE001
             pass
-    fn = BARE_OPS.get(name) or registry.get(name).fn
+    fn = registry.get(name).fn
 
     def run() -> None:
         fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
@@ -484,10 +440,6 @@ def _drift_flagged(prev: dict[str, float], cur: dict[str, float]) -> list[str]:
 
 
 def main() -> None:
-    assert not set(BARE_OPS) & set(registry.names()), (
-        "BARE_OPS keys collide with registry names: "
-        f"{set(BARE_OPS) & set(registry.names())}"
-    )
     if len(sys.argv) >= 3 and sys.argv[1] == "--cohort":
         _run_cohort(sys.argv[2])
         return

@@ -46,11 +46,10 @@ CURATED = [
     "multimodal_decode_stats",
     "asof_purchase_attribution",
     # round-4 additions: deepest new join tree, disjunctive predicate
-    # decomposition, cluster-bounded kNN, fused retrieval, and the
-    # two-phase-prefix-sum selection
+    # decomposition, fused retrieval, and the two-phase-prefix-sum
+    # selection
     "tpch_q7_volume_shipping",
     "tpch_q19_disjunctive_join",
-    "sim_knn_join",
     "sim_hybrid_rrf",
     "pipeline_token_budget",
     "curation_domain_cap",

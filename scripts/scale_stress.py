@@ -16,23 +16,15 @@ including the property that near-dup cluster sizes stay O(1) as the
 corpus grows (base pool scales with n), which is what real corpora do
 and what keeps LSH-bucketed plans linear.
 
-Two entries are expected super-linear and measured at REDUCED scales
+One entry is expected super-linear and measured at REDUCED scales
 with the root cause recorded rather than hidden:
-
-- dedup_semantic (JVM fold form): within-cluster pairwise scoring
-  pays an INTERPRETED JVM fold per pair, so even with the r10
-  corpus-size-dependent k (seed_k_for: clusters stay ~2048 vectors,
-  pair count ∝ n) the constant is ~100x the Arrow twin's BLAS
-  kernel; measured at reduced scales as the like-for-like comparison
-  carrier. The Arrow twin is the production form.
-- sim_sparse_cosine_pairs: the df-cap is RELATIVE (df <= 5% of
-  corpus), so on the fixture's CLOSED 31-word vocab every kept
-  term's posting list grows proportionally to n and the per-term
-  self-join is quadratic AS A DATA PROPERTY. Natural corpora grow
-  vocabulary (Heaps' law), keeping discriminative-term df sublinear
-  — measured here via the open-vocab corpus variant
-  (vocab ~ 31 * scale^0.6), recorded as
-  sim_sparse_cosine_pairs__openvocab.
+sim_sparse_cosine_pairs. Its df-cap is RELATIVE (df <= 5% of
+corpus), so on the fixture's CLOSED 31-word vocab every kept term's
+posting list grows proportionally to n and the per-term self-join is
+quadratic AS A DATA PROPERTY. Natural corpora grow vocabulary (Heaps'
+law), keeping discriminative-term df sublinear — measured here via
+the open-vocab corpus variant (vocab ~ 31 * scale^0.6), recorded as
+sim_sparse_cosine_pairs__openvocab.
 
 Round 8 adds the EVENTS-fact variants: "ev" replicates the driver
 fixture's own cross-SF law (users ∝ n at ~66 events/user, CLOSED
@@ -93,21 +85,6 @@ ENTRIES: dict[str, tuple[list[int], str]] = {
         "shared with the oracle CTE): cluster size stays bounded so "
         "within-cluster matmul work is ~n * 2048 — linear by sizing "
         "(was Theta(n^2/8) with the fixture constant, tail 1.15).",
-    ),
-    "dedup_semantic": (
-        [1, 4, 10, 30],
-        "interpreted-JVM-fold-per-pair comparison carrier; pair count "
-        "is linear by sizing since r10 (seed_k_for) but the per-pair "
-        "fold constant is ~100x the Arrow kernel's — the production "
-        "form is dedup_semantic_arrow. Extended to 30x (VERDICT r10 "
-        "Missing #3, measured r11): 88.2 s at 30x (k=29), tail ~1.5 "
-        "even though within-cluster pair rows are linear by sizing "
-        "(n^2/2k = 1024n: 2.0e7 at 10x -> 6.1e7 at 30x, ratio 3.0 vs "
-        "time ratio 5.1) — the interpreted fold's throughput degrades "
-        "past what pair counts explain, while the Arrow twin runs the "
-        "IDENTICAL pair set in 3.99 s (22x). That gap, now measured "
-        "through 30x, is the whole reason the Arrow form holds the "
-        "window slot; carrier kept for the like-for-like comparison.",
     ),
     "sim_sparse_cosine_pairs": (
         [1, 2, 4],

@@ -42,8 +42,9 @@ def cosine_hoisted(a: Column, b: Column, na: Column, nb: Column) -> Column:
     per PAIR. The higher-order-function folds are interpreted (no
     codegen), so in an N² pairwise join the two dot(x,x) folds
     dominate — hoisting them into the join inputs cuts per-pair work
-    from 3 folds to 1 (measured 12.9→6.9 s on sim_knn_join and
-    10.6→6.4 s on dedup_semantic at sf0.1).
+    from 3 folds to 1. The fold also beats an unrolled
+    ``0.0 + a[1]*b[1] + …`` chain, which at dim=64 falls out of
+    whole-stage codegen and evaluates interpreted per node.
     ``na``/``nb`` MUST be ``sqrt(_dot(x, x))`` of the same arrays:
     then ``_dot(a,b) / (na * nb)`` is the SAME IEEE expression tree
     as ``cosine`` evaluates — identical operand order, bit-identical
@@ -54,17 +55,6 @@ def cosine_hoisted(a: Column, b: Column, na: Column, nb: Column) -> Column:
 def row_norm(e: Column) -> Column:
     """``sqrt(dot(e, e))`` — the hoistable factor of ``cosine``."""
     return F.sqrt(_dot(e, e))
-
-
-def pair_cosine(a: Column, b: Column, na: Column, nb: Column) -> Column:
-    """Hoisted-norm cosine for pairwise joins (alias of
-    ``cosine_hoisted``). An unrolled
-    ``0.0 + a[1]*b[1] + …`` element_at chain was A/B-measured here
-    and REJECTED: at dim=64 the 192-node expression falls out of
-    whole-stage codegen and evaluates interpreted per node
-    (sim_knn_join 5.7→16.3 s at sf0.1) — the zip_with/aggregate fold
-    is the fast JVM form for wide arrays."""
-    return cosine_hoisted(a, b, na, nb)
 
 
 def _as_double(col: Column) -> Column:
@@ -116,7 +106,7 @@ def cosine_pairs(emb: DataFrame, threshold: float = 0.45) -> DataFrame:
         .withColumn(
             "cos_sim",
             F.round(
-                pair_cosine(F.col("ea"), F.col("eb"), F.col("na"), F.col("nb")),
+                cosine_hoisted(F.col("ea"), F.col("eb"), F.col("na"), F.col("nb")),
                 4,
             ),
         )
@@ -205,7 +195,7 @@ def embedding_lsh_pairs(
         .withColumn(
             "cos_sim",
             F.round(
-                pair_cosine(F.col("ea"), F.col("eb"), F.col("na"), F.col("nb")),
+                cosine_hoisted(F.col("ea"), F.col("eb"), F.col("na"), F.col("nb")),
                 4,
             ),
         )
@@ -498,140 +488,34 @@ def seed_centroid_assign(emb: DataFrame, k: int | None = None) -> DataFrame:
     )
 
 
-def semantic_dedup(emb: DataFrame, k: int | None = None, eps: float = 0.45) -> DataFrame:
-    """SemDeDup-shaped semantic deduplication (Abbas et al. 2023,
-    arXiv:2303.09540): coarse-cluster the embedding space, then prune
-    within each cluster any vector that has an earlier (lower vec_id)
-    neighbor with cosine >= eps. Returns (vec_id, cid, keep) for every
-    vector — ``keep=false`` rows are the semantic duplicates a
-    curation pipeline drops.
-
-    Plan shape: one narrow assignment map (no shuffle), then a single
-    self-join ON cid — the pairwise cosine work is bounded per
-    cluster, which is the entire point of SemDeDup: the quadratic is
-    paid inside k partitions of n/k vectors, never across the corpus.
-    k IS corpus-size-dependent (``seed_k_for``, default when k=None):
-    clusters stay ~SEED_TARGET_CLUSTER vectors, so total pairwise
-    work is ~n * TARGET — linear, measured in SCALING.json on the
-    Arrow twin. At 100 TB hot clusters additionally split via AQE
-    skew handling; keep-decision is earliest-id-wins, which needs no
-    connected components — one join, one distinct, one anti-join."""
-    ed = _as_double(F.col("embedding"))
-    asg = seed_centroid_assign(emb, k).select(
-        "vec_id", "cid", ed.alias("emb"), row_norm(ed).alias("nrm")
-    )
-    later = asg.select(
-        F.col("vec_id").alias("b_id"),
-        F.col("cid").alias("b_cid"),
-        F.col("emb").alias("b_emb"),
-        F.col("nrm").alias("b_nrm"),
-    )
-    dup_ids = (
-        asg.join(
-            later,
-            (F.col("cid") == F.col("b_cid")) & (F.col("b_id") < F.col("vec_id")),
-        )
-        .filter(
-            F.round(
-                pair_cosine(
-                    F.col("emb"), F.col("b_emb"), F.col("nrm"), F.col("b_nrm")
-                ),
-                4,
-            )
-            >= eps
-        )
-        .select("vec_id")
-        .distinct()
-        .withColumn("_dup", F.lit(True))
-    )
-    return (
-        asg.join(dup_ids, "vec_id", "left")
-        .select(
-            "vec_id",
-            "cid",
-            F.coalesce(~F.col("_dup"), F.lit(True)).alias("keep"),
-        )
-        .orderBy("vec_id")
-    )
-
-
-def knn_join(
+def knn_join_arrow(
     emb: DataFrame, k: int | None = None, n_neighbors: int = 3
 ) -> DataFrame:
     """Cluster-bounded k-NN self-join: for every vector, its
     ``n_neighbors`` nearest neighbors (by cosine) WITHIN its coarse
     cluster — the all-vectors analog of the single-query top-k, and
     the workload shape of embedding-based retrieval-index builds.
+    Vectors in singleton clusters emit no rows, by definition of
+    within-cluster neighbors.
 
-    The coarse assignment bounds the quadratic exactly as in
-    ``semantic_dedup``; ranking is a per-vec_id window over the
-    cluster-joined pairs (one shuffle keyed cid for the join, one
-    keyed vec_id for the window — at scale the second exchange is the
-    smaller one since pairs are already cluster-local). Vectors in
-    singleton clusters emit no rows, by definition of within-cluster
-    neighbors. cos_sim is rounded to 4 dp with vec_id tie-breaks so
-    ranks are engine-reproducible."""
-    from pyspark.sql.window import Window
-
-    ed = _as_double(F.col("embedding"))
-    asg = seed_centroid_assign(emb, k).select(
-        "vec_id", "cid", ed.alias("emb"), row_norm(ed).alias("nrm")
-    )
-    other = asg.select(
-        F.col("vec_id").alias("nbr_id"),
-        F.col("cid").alias("b_cid"),
-        F.col("emb").alias("b_emb"),
-        F.col("nrm").alias("b_nrm"),
-    )
-    scored = (
-        asg.join(
-            other,
-            (F.col("cid") == F.col("b_cid")) & (F.col("nbr_id") != F.col("vec_id")),
-        )
-        .withColumn(
-            "cos_sim",
-            F.round(
-                pair_cosine(
-                    F.col("emb"), F.col("b_emb"), F.col("nrm"), F.col("b_nrm")
-                ),
-                4,
-            ),
-        )
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.desc("cos_sim"), "nbr_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= n_neighbors)
-        .select("vec_id", "rank", "nbr_id", "cos_sim")
-        .orderBy("vec_id", "rank")
-    )
-
-
-def knn_join_arrow(
-    emb: DataFrame, k: int | None = None, n_neighbors: int = 3
-) -> DataFrame:
-    """``knn_join`` computed with a per-cluster NUMPY kernel instead
-    of the per-pair JVM fold: one applyInPandas over the coarse
-    clusters, one BLAS matmul per cluster (X @ X.T / outer(norms)),
-    top-k by rounded cosine with vec_id tie-break.
-
-    Why this exists: the higher-order-function cosine fold is
-    interpreted (no codegen), so the cluster-bounded pair join pays
-    an interpreted fold per PAIR; the Arrow path pays one vectorized
-    matmul per CLUSTER. Same output contract as ``knn_join``.
+    Kernel: one applyInPandas over the coarse clusters, one BLAS
+    matmul per cluster (X @ X.T / outer(norms)), top-k by 4-dp
+    rounded cosine with vec_id tie-break. The interpreted JVM cosine
+    fold would pay per PAIR; this pays one vectorized matmul per
+    CLUSTER.
 
     Determinism argument (same class as the LSH band-miss equality):
-    numpy sums in a different order than the JVM fold, so a cosine
-    within ~1 ULP of a 4-dp rounding midpoint could rank differently
-    — that requires the true value within ~1e-15 of x.00005
-    (probability ~1e-11 per pair; zero observed across all fixture
-    SFs, pinned by the equality test in tests/test_curation_ops.py).
-    np.round is half-even vs Spark's half-up, which differs only on
-    EXACT binary midpoints — measure-zero for irrational cosines.
+    numpy sums in a different order than the oracle's
+    list_cosine_similarity, so a cosine within ~1 ULP of a 4-dp
+    rounding midpoint could rank differently — that requires the
+    true value within ~1e-15 of x.00005 (probability ~1e-11 per
+    pair; zero observed across all fixture SFs, pinned by the
+    oracle-parity tests). np.round is half-even vs Spark's half-up,
+    which differs only on EXACT binary midpoints — measure-zero for
+    irrational cosines.
 
     At 100 TB the Arrow transfer is the cost: ~dim doubles per
-    vector shipped to Python once per query. The JVM form stays the
-    zero-Python fallback; this is the throughput form."""
+    vector shipped to Python once per query."""
     import numpy as np
     from pyspark.sql.types import (
         DoubleType,
@@ -698,13 +582,21 @@ def knn_join_arrow(
 def semantic_dedup_arrow(
     emb: DataFrame, k: int | None = None, eps: float = 0.45
 ) -> DataFrame:
-    """``semantic_dedup`` with the within-cluster pruning computed by
-    a per-cluster numpy kernel (one matmul per cluster) instead of
-    the per-pair JVM fold — same output contract, same determinism
-    argument as ``knn_join_arrow`` (bit-equal to the JVM form on all
-    fixture SFs, pinned by test). The keep rule stays
-    earliest-id-wins: dup iff ANY earlier in-cluster vector has
-    rounded cosine >= eps."""
+    """SemDeDup-shaped semantic deduplication (Abbas et al. 2023,
+    arXiv:2303.09540): coarse-cluster the embedding space, then prune
+    within each cluster any vector that has an earlier (lower vec_id)
+    neighbor with 4-dp rounded cosine >= eps. Returns (vec_id, cid,
+    keep) for every vector — ``keep=false`` rows are the semantic
+    duplicates a curation pipeline drops.
+
+    The pairwise work is bounded per cluster, which is the entire
+    point of SemDeDup: the quadratic is paid inside k clusters of
+    n/k vectors, never across the corpus. k IS corpus-size-dependent
+    (``seed_k_for``, default when k=None), so clusters stay
+    ~SEED_TARGET_CLUSTER vectors and total work is ~n * TARGET —
+    linear, measured in SCALING.json. Kernel and determinism
+    argument as ``knn_join_arrow``: one numpy matmul per cluster,
+    earliest-id-wins as a strict-lower-triangle mask."""
     import numpy as np
     from pyspark.sql.types import (
         BooleanType,

@@ -81,21 +81,6 @@ ORDER BY asg.vec_id
 """
 
 
-@register("dedup_semantic", oracle=SEMANTIC_DEDUP_ORACLE, tags=("LLM-dedup",))
-def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup-shaped semantic dedup (arXiv:2303.09540): coarse
-    clusters via the seed quantizer, then earliest-id-wins pruning of
-    within-cluster cosine neighbors at eps=0.45 (inside the fixture's
-    observed similarity range — the same operating point as
-    dedup_embedding_pairs). Emits (vec_id, cid, keep) for the whole
-    table so the driver hashes the full keep/drop decision, not just
-    the survivor list. See similarity.semantic_dedup for the
-    100 TB plan-shape argument (per-cluster-bounded quadratic, one
-    cid-keyed shuffle)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    return similarity.semantic_dedup(emb, eps=0.45)
-
-
 KNN_JOIN_ORACLE = f"""
 WITH {_ASSIGN_CTES},
 pairs AS (
@@ -116,18 +101,6 @@ SELECT vec_id, rank, nbr_id, cos_sim FROM (
 WHERE rank <= 3
 ORDER BY vec_id, rank
 """
-
-
-@register("sim_knn_join", oracle=KNN_JOIN_ORACLE, tags=("LLM-sim",))
-def sim_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cluster-bounded k-NN self-join: every vector's top-3 neighbors
-    within its coarse cluster — the retrieval-index-build workload
-    (single-query top-k is sim_cosine_topk; this is the all-rows
-    form). The coarse assignment bounds the pairwise work per
-    cluster; ranks use 4-dp cosine with nbr_id tie-breaks so the
-    window order is engine-reproducible. See similarity.knn_join."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    return similarity.knn_join(emb, n_neighbors=3)
 
 
 SHARD_LAYOUT_ORACLE = """
@@ -706,7 +679,7 @@ def pipeline_corpus_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     the capstone composition of the curation family: (1) quality
     gate (≥10 tokens, within-doc dup-bigram fraction ≤ 0.5), (2)
     near-dup drop (3-gram Jaccard ≥ 0.9, earliest-doc_id-wins — the
-    pairwise-greedy rule of dedup_semantic applied to text), (3)
+    pairwise-greedy rule of dedup_semantic_arrow applied to text), (3)
     per-source cap at 50 best-quality docs, (4) token-budget cut at
     50% of surviving corpus tokens, (5) deterministic md5 shard
     assignment. One DataFrame expression; Catalyst pipelines the
@@ -1133,60 +1106,6 @@ ORDER BY vec_id
 """
 
 
-@register("sim_hard_negatives", oracle=HARD_NEGATIVES_ORACLE, tags=("LLM-sim",))
-def sim_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hard-negative mining — the contrastive-training data op: for
-    every vector, the MOST similar vector from a DIFFERENT source
-    (similar enough to be confusable, labeled differently — the
-    negatives that actually teach a retrieval/embedding model).
-    Rides the same cluster-bounded pairwise machinery as
-    sim_knn_join with the cross-source predicate pushed into the
-    join, plus a per-vector rank-1 compaction (WindowGroupLimit).
-    Source labels join in from the documents table (vec_id aligns
-    with doc_id in the fixture). At 100 TB the cluster bound is what
-    keeps this from being all-pairs — the same argument as
-    semantic dedup, with the source-inequality making buckets even
-    sparser."""
-    from pyspark.sql.window import Window as Wnd
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    docs = load_table(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("vec_id"), "source"
-    )
-    ed = F.col("embedding").cast("array<double>")
-    asg = (
-        similarity.seed_centroid_assign(emb)
-        .select("vec_id", "cid", ed.alias("emb"), similarity.row_norm(ed).alias("nrm"))
-        .join(docs, "vec_id")
-    )
-    other = asg.select(
-        F.col("vec_id").alias("neg_id"),
-        F.col("cid").alias("b_cid"),
-        F.col("emb").alias("b_emb"),
-        F.col("nrm").alias("b_nrm"),
-        F.col("source").alias("neg_source"),
-    )
-    scored = asg.join(
-        other,
-        (F.col("cid") == F.col("b_cid")) & (F.col("source") != F.col("neg_source")),
-    ).withColumn(
-        "cos_sim",
-        F.round(
-            similarity.pair_cosine(
-                F.col("emb"), F.col("b_emb"), F.col("nrm"), F.col("b_nrm")
-            ),
-            4,
-        ),
-    )
-    w = Wnd.partitionBy("vec_id").orderBy(F.desc("cos_sim"), "neg_id")
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "neg_id", "neg_source", "cos_sim")
-        .orderBy("vec_id")
-    )
-
-
 LABEL_CENTROIDS_ORACLE = """
 SELECT label, CAST(i - 1 AS INTEGER) AS pos,
        round(avg(e), 6) AS mean_val
@@ -1332,26 +1251,31 @@ def sim_centroid_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("sim_knn_join_arrow", oracle=KNN_JOIN_ORACLE, tags=("LLM-sim",))
 def sim_knn_join_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """sim_knn_join's Arrow throughput form: one numpy matmul per
-    coarse cluster via applyInPandas instead of an interpreted JVM
-    cosine fold per pair — measured 4.97 -> 1.90 s at sf0.1,
-    bit-equal output at every fixture SF (pinned in
-    tests/test_curation_ops.py; determinism argument in
-    similarity.knn_join_arrow's docstring). Same oracle as
-    sim_knn_join — both forms must match the same exact SQL. The JVM
-    form stays registered as the zero-Python fallback; at 100 TB the
-    Arrow transfer (dim doubles per vector, once) buys BLAS
-    pairwise throughput inside each cluster task."""
+    """Cluster-bounded k-NN self-join: every vector's top-3 neighbors
+    within its coarse cluster — the retrieval-index-build workload
+    (single-query top-k is sim_cosine_topk; this is the all-rows
+    form). One numpy matmul per coarse cluster via applyInPandas;
+    ranks use 4-dp cosine with nbr_id tie-breaks so the order is
+    engine-reproducible (determinism argument in
+    similarity.knn_join_arrow's docstring). At 100 TB the Arrow
+    transfer (dim doubles per vector, once) buys BLAS pairwise
+    throughput inside each cluster task."""
     emb = load_table(spark, sf_dir, "embeddings")
     return similarity.knn_join_arrow(emb, n_neighbors=3)
 
 
 @register("dedup_semantic_arrow", oracle=SEMANTIC_DEDUP_ORACLE, tags=("LLM-dedup",))
 def dedup_semantic_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """dedup_semantic's Arrow throughput form — per-cluster numpy
-    matmul + strict-lower-triangle earliest-id-wins mask instead of
-    the per-pair JVM fold. Same oracle as dedup_semantic; bit-equal
-    on every fixture SF (pinned in tests)."""
+    """SemDeDup-shaped semantic dedup (arXiv:2303.09540): coarse
+    clusters via the seed quantizer, then earliest-id-wins pruning of
+    within-cluster cosine neighbors at eps=0.45 (inside the fixture's
+    observed similarity range — the same operating point as
+    dedup_embedding_pairs), scored by one numpy matmul per cluster.
+    Emits (vec_id, cid, keep) for the whole table so the oracle
+    comparison covers the full keep/drop decision, not just the
+    survivor list.
+    See similarity.semantic_dedup_arrow for the per-cluster-bounded
+    work argument."""
     emb = load_table(spark, sf_dir, "embeddings")
     return similarity.semantic_dedup_arrow(emb, eps=0.45)
 
@@ -1360,12 +1284,17 @@ def dedup_semantic_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     "sim_hard_negatives_arrow", oracle=HARD_NEGATIVES_ORACLE, tags=("LLM-sim",)
 )
 def sim_hard_negatives_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """sim_hard_negatives' Arrow throughput form: the cross-source
-    top-1 rides the per-cluster numpy matmul (mask same-source
-    columns to -inf, argmax with neg_id tie-break) instead of the
-    per-pair JVM fold + window. Same oracle as sim_hard_negatives;
-    bit-equality with the JVM form pinned in tests (the
-    knn_join_arrow determinism argument)."""
+    """Hard-negative mining — the contrastive-training data op: for
+    every vector, the MOST similar vector from a DIFFERENT source
+    (similar enough to be confusable, labeled differently — the
+    negatives that actually teach a retrieval/embedding model).
+    Source labels join in from the documents table (vec_id aligns
+    with doc_id in the fixture). Per coarse cluster, one numpy
+    matmul; same-source columns are masked to -inf and the argmax
+    breaks ties on neg_id (the similarity.knn_join_arrow determinism
+    argument). At 100 TB the cluster bound is what keeps this from
+    being all-pairs, with the source inequality making clusters
+    sparser still."""
     import numpy as np
     from pyspark.sql.types import (
         DoubleType,
@@ -2504,8 +2433,6 @@ def _ivfpq_train(spark: SparkSession, sf_dir: str, overlap=None):
     returned as a sixth element. Results are unchanged: the callback
     computes exactly the frames it would have computed after the
     trainer."""
-    from pyspark.sql.window import Window as Wnd
-
     emb = load_table(spark, sf_dir, "embeddings")
     pts = emb.select(
         "vec_id",
@@ -2514,13 +2441,20 @@ def _ivfpq_train(spark: SparkSession, sf_dir: str, overlap=None):
             "x -> cast(floor(x * 1000000 + 0.5) as bigint))"
         ).alias("q"),
     ).localCheckpoint()
-    fut = None
-    pool = None
-    if overlap is not None:
-        from concurrent.futures import ThreadPoolExecutor
+    if overlap is None:
+        return _ivfpq_fit(spark, sf_dir, pts)
+    from concurrent.futures import ThreadPoolExecutor
 
-        pool = ThreadPoolExecutor(max_workers=1)
+    with ThreadPoolExecutor(max_workers=1) as pool:
         fut = pool.submit(overlap, pts)
+        return (*_ivfpq_fit(spark, sf_dir, pts), fut.result())
+
+
+def _ivfpq_fit(spark: SparkSession, sf_dir: str, pts: DataFrame):
+    """The sequential trainer rounds of ``_ivfpq_train`` over the
+    checkpointed ``pts`` frame."""
+    from pyspark.sql.window import Window as Wnd
+
     # coarse k-means (k=4, 2 iterations) over the full vectors
     cent = (
         pts.withColumn("rn", F.row_number().over(Wnd.orderBy("vec_id")))
@@ -2578,10 +2512,6 @@ def _ivfpq_train(spark: SparkSession, sf_dir: str, overlap=None):
         .localCheckpoint()
     )
     _, rcent, rasg = _pq_train(spark, sf_dir, subs=rsub.select("vec_id", "sub", "sq"))
-    if overlap is not None:
-        res = fut.result()
-        pool.shutdown()
-        return pts, cent, casg, rcent, rasg, res
     return pts, cent, casg, rcent, rasg
 
 

@@ -3549,8 +3549,8 @@ ORDER BY doc_a, doc_b
 )
 def sim_sparse_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SPARSE bag-of-words cosine similarity — the lexical
-    counterpart of the dense-embedding family (dedup_semantic /
-    sim_knn_join work on vectors; this works straight off text with
+    counterpart of the dense-embedding family (dedup_semantic_arrow /
+    sim_knn_join_arrow work on vectors; this works straight off text with
     no embedding model): doc pairs whose bigram-count vectors have
     cos² >= 0.25, via the classic inverted-index self-join. Terms
     are BIGRAMS restricted to DISCRIMINATIVE ones (document

@@ -1,7 +1,7 @@
 """Bench-harness contract guards (no Spark session needed): every
-benched name resolves to exactly one cohort, bare ops cannot shadow
-registry entries, and every benched name actually exists — a renamed
-registry entry must fail here, not silently drop out of the battery.
+benched name resolves to exactly one cohort, and every benched name
+is a registry entry — a renamed registry entry must fail here, not
+silently drop out of the battery.
 """
 
 from __future__ import annotations
@@ -28,15 +28,10 @@ def test_bench_names_partition_into_cohorts():
         assert bench._cohort_of(n) in bench.COHORT_ORDER, n
 
 
-def test_bare_ops_disjoint_from_registry():
-    bench = _load_bench()
-    assert not set(bench.BARE_OPS) & set(registry.names())
-
-
 def test_every_benched_name_is_registered_or_bare():
     bench = _load_bench()
-    known = set(registry.names()) | set(bench.BARE_OPS)
-    missing = [n for n in bench._bench_names() if n not in known]
+    known = set(registry.names())
+    missing = [n for n in bench.HEADLINE + bench.EXTRA if n not in known]
     assert not missing, missing
 
 

@@ -9,6 +9,7 @@ from __future__ import annotations
 import ast
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from sql_engine_triangle_spark import concurrency
@@ -44,6 +45,14 @@ def test_wide_call_clamps_workers_and_preserves_values(spark):
         rows = out.collect()
         assert len(rows) == 1
         assert rows[0]["k"] == i and rows[0]["count"] == 3
+
+
+def test_disk_only_length_mismatch_raises(spark):
+    # A short flag tuple must fail loudly, also under python -O: zip
+    # would otherwise drop the unflagged frames from the result.
+    frames = [spark.range(2), spark.range(3)]
+    with pytest.raises(ValueError, match="disk_only"):
+        checkpoint_all(*frames, disk_only=(True,))
 
 
 def test_clamp_constant_is_small():

@@ -6,13 +6,15 @@ layout balance, partition-count independence)."""
 
 from __future__ import annotations
 
+import duckdb
 import pandas as pd
 import pyspark.sql.functions as F
+import pytest
 
-from sql_engine_triangle_spark.catalog import load_table
+from sql_engine_triangle_spark.catalog import TABLES, load_table, table_path
 from sql_engine_triangle_spark.operators import similarity
 from sql_engine_triangle_spark.queries import registry
-from tests.conftest import SF_DIR_SMALL, assert_frames_match
+from tests.conftest import SF_DIR_SMALL, assert_frames_match, run_parity
 
 
 def test_seed_assignment_covers_all_vectors(spark):
@@ -55,7 +57,7 @@ def test_seed_k_formula_matches_oracle_cte():
 
 def test_semantic_dedup_keep_semantics(spark):
     emb = load_table(spark, SF_DIR_SMALL, "embeddings")
-    res = similarity.semantic_dedup(emb, k=8, eps=0.45).toPandas()
+    res = similarity.semantic_dedup_arrow(emb, k=8, eps=0.45).toPandas()
     assert len(res) == emb.count()
     # the lowest vec_id of every cluster can never be pruned
     firsts = res.sort_values("vec_id").groupby("cid").head(1)
@@ -78,7 +80,7 @@ def test_semantic_dedup_keep_semantics(spark):
 
 def test_knn_join_rank_bounds(spark):
     emb = load_table(spark, SF_DIR_SMALL, "embeddings")
-    res = similarity.knn_join(emb, k=8, n_neighbors=3).toPandas()
+    res = similarity.knn_join_arrow(emb, k=8, n_neighbors=3).toPandas()
     assert res["rank"].between(1, 3).all()
     # per vec_id: ranks are 1..m with no gaps, cos_sim non-increasing
     for _, g in res.groupby("vec_id"):
@@ -113,8 +115,8 @@ def test_curation_partition_count_independence(spark):
     task boundaries, and the BPE budget's banded prefix sum must not
     depend on band placement."""
     for name in (
-        "dedup_semantic",
-        "sim_knn_join",
+        "dedup_semantic_arrow",
+        "sim_knn_join_arrow",
         "pipeline_shard_layout",
         "text_tokenize_bpe",
         "dedup_repeated_passages",
@@ -274,24 +276,27 @@ def test_capstone_cc_keeps_only_component_minima(spark):
     assert not (kept & nonmin)
 
 
-def test_arrow_kernels_bit_equal_to_jvm_forms(spark):
-    """The Arrow throughput forms (numpy matmul per cluster) must be
-    BIT-EQUAL to the certified JVM fold forms — this is the
-    determinism claim that lets them share the JVM forms' oracles
-    (similarity.knn_join_arrow docstring). Any 4-dp rounding-midpoint
-    flip between the two summation orders fails here."""
-    emb = load_table(spark, SF_DIR_SMALL, "embeddings")
-    a = similarity.knn_join(emb).toPandas()
-    b = similarity.knn_join_arrow(emb).toPandas()
-    assert_frames_match(a, b)
-    c = similarity.semantic_dedup(emb, k=similarity.SEED_K, eps=0.45).toPandas()
-    d = similarity.semantic_dedup_arrow(
-        emb, k=similarity.SEED_K, eps=0.45
-    ).toPandas()
-    assert_frames_match(c, d)
-    e = registry.get("sim_hard_negatives").fn(spark, SF_DIR_SMALL).toPandas()
-    f = registry.get("sim_hard_negatives_arrow").fn(spark, SF_DIR_SMALL).toPandas()
-    assert_frames_match(e, f)
+def test_arrow_kernels_match_oracles_at_small_sf(spark):
+    """The Arrow cosine kernels sum in numpy's order, not DuckDB's, so
+    a 4-dp rounding-midpoint flip would diverge from the oracle
+    (similarity.knn_join_arrow docstring). The registry sweep checks
+    them at the default test SF; this pins the smallest fixture SF
+    too, where clusters are smallest and one flip moves a rank."""
+    con = duckdb.connect()
+    try:
+        for t in TABLES:
+            con.execute(
+                f"CREATE VIEW {t} AS SELECT * "
+                f"FROM read_parquet('{table_path(SF_DIR_SMALL, t)}')"
+            )
+        for name in (
+            "sim_knn_join_arrow",
+            "dedup_semantic_arrow",
+            "sim_hard_negatives_arrow",
+        ):
+            run_parity(spark, con, name, sf_dir=SF_DIR_SMALL)
+    finally:
+        con.close()
 
 
 def test_decontam_capstone_excludes_eval_and_contaminated(spark):
@@ -556,6 +561,31 @@ def test_t_closeness_matches_python_reference(spark):
         assert row["at_risk_rows"] == risk_rows, nat
         assert row["risk_permille"] == (1000 * risk_rows) // nrows, nat
     assert res["classes_fail_t200"].sum() > 0  # non-vacuous
+
+
+def test_ivfpq_train_releases_overlap_pool_on_failure(spark, monkeypatch):
+    """_ivfpq_train runs its overlap callback on a worker thread while
+    the trainer rounds run; a failing trainer must still shut that
+    pool down, not leak it."""
+    import concurrent.futures as cf
+
+    from sql_engine_triangle_spark.queries import curation_ops
+
+    pools = []
+
+    class RecordingPool(cf.ThreadPoolExecutor):
+        def shutdown(self, *args, **kwargs):
+            pools.append(self)
+            super().shutdown(*args, **kwargs)
+
+    def failing_pq_train(*args, **kwargs):
+        raise RuntimeError("trainer failed")
+
+    monkeypatch.setattr(cf, "ThreadPoolExecutor", RecordingPool)
+    monkeypatch.setattr(curation_ops, "_pq_train", failing_pq_train)
+    with pytest.raises(RuntimeError, match="trainer failed"):
+        curation_ops._ivfpq_train(spark, SF_DIR_SMALL, overlap=lambda pts: pts.count())
+    assert len(pools) == 1
 
 
 def test_ivfpq_matches_independent_numpy_pipeline(spark):
